@@ -1,8 +1,13 @@
-"""Headline benchmark: run every declared query at $SPARK_GRAFT_SF_DIR.
+"""Headline benchmark and the one suite timing loop: run the declared
+queries at $SPARK_GRAFT_SF_DIR.
+
+Usage:
+  python bench.py [QUERY ...]                  # all queries, or a subset
+  python bench.py --ab KEY=A,B [QUERY ...]     # same-JVM config A/B
 
 Prints the full JSON line
   {"metric": "...", "value": <total sec>, "unit": "sec",
-   "queries": {name: sec, ...}, "sf": <sf>}
+   "queries": {name: sec, ...}, "failed": {name: message, ...}, "sf": <sf>}
 followed by ONE final COMPACT JSON line (same metric/value, no
 per-query map) sized to survive the driver's ~2000-char stdout tail
 capture — so the driver's recorded ``parsed`` is non-null again.
@@ -16,6 +21,17 @@ untouched code), which a median absorbs while a lone sample cannot.
 Pass 1 still absorbs JVM/codegen warmup — honest for a batch engine —
 but the median discards that pass unless the query is genuinely slow.
 
+A query that raises is recorded under ``failed`` and the queries after
+it still run; the process then exits 1 after printing both lines. An
+unknown query name exits 2.
+
+``--ab KEY=A,B`` times every selected query under both values of the
+runtime SQL conf KEY inside one JVM, A-then-B on even passes and
+B-then-A on odd ones (ABBA), restores KEY afterwards and reports
+per-arm medians under ``ab``; ``queries``/``value`` are arm A's. The
+regression gates below compare against baselines recorded under the
+session defaults, so they are skipped in this mode.
+
 Two regression lists ship in the JSON line:
   * ``regressions_vs_r1``   — vs the round-1 floor (BENCH_r01.json),
     the driver's long-horizon gate.
@@ -27,6 +43,7 @@ Two regression lists ship in the JSON line:
 
 from __future__ import annotations
 
+import argparse
 import glob
 import json
 import os
@@ -34,10 +51,14 @@ import re
 import statistics
 import sys
 import time
+import traceback
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from bikes_data_warehouse_etl_spark.session import get_spark  # noqa: E402
+from bikes_data_warehouse_etl_spark.session import (  # noqa: E402
+    get_spark,
+    unpersist_all,
+)
 from bikes_data_warehouse_etl_spark.plans import QUERIES  # noqa: E402
 
 REPO = os.path.dirname(os.path.abspath(__file__))
@@ -317,66 +338,161 @@ def compact_summary(payload: dict) -> dict:
               "over_latency_budget"):
         if len(s.get(k, [])) > 20:
             s[k] = s[k][:20] + [f"...+{len(s[k]) - 20} more"]
+    if "ab" in payload:
+        # per-arm totals only: the per-arm per-query maps are unbounded
+        s["ab"] = {k: payload["ab"][k] for k in ("conf", "total")}
     s["queries_n"] = len(payload.get("queries", {}))
+    s["failed_n"] = len(payload.get("failed", {}))
     s["per_query_in"] = "BENCH_latest_full.json"
     return s
 
 
+def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
+    """Query subset and ``--ab``; argparse exits 2 on a bad argument,
+    an unknown query name included."""
+    p = argparse.ArgumentParser(
+        description="Time the declared queries at $SPARK_GRAFT_SF_DIR."
+    )
+    p.add_argument(
+        "queries", nargs="*", metavar="QUERY",
+        help="run only these queries, in this order (default: all)",
+    )
+    p.add_argument(
+        "--ab", metavar="KEY=A,B",
+        help="time each query under both values of runtime SQL conf KEY, "
+        "arm order alternating per pass; skips the regression gates",
+    )
+    args = p.parse_args(argv)
+    unknown = [q for q in args.queries if q not in QUERIES]
+    if unknown:
+        p.error(f"unknown queries: {unknown}")
+    if args.ab is not None:
+        key, _, values = args.ab.partition("=")
+        arms = values.split(",")
+        if not key or len(arms) != 2 or not all(arms) or arms[0] == arms[1]:
+            p.error("--ab wants KEY=A,B with two different values")
+        args.ab = (key, arms)
+    return args
+
+
+def run_passes(spark, specs: dict, sf_dir: str, n_runs: int, ab=None):
+    """Time every spec ``n_runs`` times through the noop sink, one
+    interleaved pass at a time, each pass led by a calibration cell.
+
+    Returns ``(samples, failed, cal_samples)``: ``samples[arm][name]``
+    lists seconds (the only arm is ``None`` without ``ab``); ``failed``
+    maps a query that raised to the first line of its error. A failed
+    query is not retried and never stops the queries after it. With
+    ``ab=(key, [a, b])`` each query runs under both values of the
+    runtime conf ``key`` back to back, a-then-b on even passes and
+    b-then-a on odd ones, and ``key`` is restored afterwards.
+    """
+    key, arms = ab or (None, [None])
+    samples = {arm: {name: [] for name in specs} for arm in arms}
+    failed: dict[str, str] = {}
+    cal_samples: list[float] = []
+    prior = spark.conf.get(key, None) if key else None
+    try:
+        for p in range(n_runs):
+            # calibration first in each pass: same JVM state the queries see
+            cal_samples.append(run_calibration(spark))
+            order = arms if p % 2 == 0 else arms[::-1]
+            for name, spec in specs.items():
+                if name in failed:
+                    continue
+                for arm in order:
+                    if key:
+                        spark.conf.set(key, arm)
+                    t0 = time.perf_counter()
+                    try:
+                        spec.spark(spark, sf_dir).write.format("noop").mode(
+                            "overwrite"
+                        ).save()
+                        samples[arm][name].append(time.perf_counter() - t0)
+                    except Exception as e:  # noqa: BLE001 — keep timing the rest
+                        traceback.print_exc()
+                        lines = str(e).strip().splitlines() or [repr(e)]
+                        failed[name] = lines[0][:300]
+                        break
+                    finally:
+                        # release localCheckpoint blocks between queries:
+                        # suite memory stays flat in query count
+                        unpersist_all(spark)
+    finally:
+        if key and prior is None:
+            spark.conf.unset(key)
+        elif key:
+            spark.conf.set(key, prior)
+    return samples, failed, cal_samples
+
+
 def main() -> None:
+    args = parse_args()
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = os.path.basename(sf_dir.rstrip("/")).replace("sf", "")
     n_runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3"))
+    specs = {name: QUERIES[name] for name in args.queries} or QUERIES
     spark = get_spark("bench")
 
-    samples: dict[str, list[float]] = {name: [] for name in QUERIES}
-    cal_samples: list[float] = []
-    for _ in range(n_runs):
-        # calibration first in each pass: same JVM state the queries see
-        cal_samples.append(run_calibration(spark))
-        for name, spec in QUERIES.items():
-            t0 = time.perf_counter()
-            df = spec.spark(spark, sf_dir)
-            df.write.format("noop").mode("overwrite").save()
-            samples[name].append(time.perf_counter() - t0)
-
-    timings = {
-        name: round(statistics.median(ts), 3) for name, ts in samples.items()
+    samples, failed, cal_samples = run_passes(
+        spark, specs, sf_dir, n_runs, args.ab
+    )
+    medians = {
+        arm: {
+            name: round(statistics.median(ts), 3)
+            for name, ts in by_name.items()
+            if name not in failed
+        }
+        for arm, by_name in samples.items()
     }
+    timings = next(iter(medians.values()))  # arm A under --ab
     total = sum(timings.values())
     cal_s = round(statistics.median(cal_samples), 3)
-
     cur_sf = float(sf) if sf else None
-    r1_baseline = os.environ.get(
-        "SPARK_GRAFT_BENCH_BASELINE", os.path.join(REPO, "BENCH_r01.json")
-    )
-    regressed_r1 = regressions_vs(timings, r1_baseline, sf=cur_sf, cal_now=cal_s)
-    regressed_prev = regressions_vs(
-        timings, latest_bench_json(), sf=cur_sf, cal_now=cal_s
-    )
-    cal_base = budget_cal_base()
-    over_budget = over_latency_budget(
-        timings, cur_sf, cal_now=cal_s, cal_base=cal_base
-    )
 
     payload = {
         "metric": "synthetic_query_suite_total",
         "value": round(total, 3),
         "unit": "sec",
         "queries": timings,
-        "sf": float(sf) if sf else None,
+        "failed": failed,
+        "sf": cur_sf,
         "runs_per_query": n_runs,
         "calibration_s": cal_s,
-        "regressions_vs_r1": regressed_r1,
-        "regressions_vs_prev": regressed_prev,
-        "latency_budget_s": LATENCY_BUDGET_S,
-        "latency_exceptions": LATENCY_EXCEPTIONS,
-        # the ceilings' home-host calibration: over_latency_budget
-        # rescales by cal_s/latency_cal_base before comparing, so a
-        # slow driver host no longer raises false budget flags
-        "latency_cal_base": cal_base,
-        "over_latency_budget": over_budget,
     }
-    payload.update(perf_vs_prev(timings, cal_s, sf=cur_sf))
+    if args.ab:
+        payload["ab"] = {
+            "conf": args.ab[0],
+            "total": {
+                arm: round(sum(m.values()), 3) for arm, m in medians.items()
+            },
+            "queries": medians,
+        }
+    else:
+        r1_baseline = os.environ.get(
+            "SPARK_GRAFT_BENCH_BASELINE", os.path.join(REPO, "BENCH_r01.json")
+        )
+        cal_base = budget_cal_base()
+        payload.update(
+            {
+                "regressions_vs_r1": regressions_vs(
+                    timings, r1_baseline, sf=cur_sf, cal_now=cal_s
+                ),
+                "regressions_vs_prev": regressions_vs(
+                    timings, latest_bench_json(), sf=cur_sf, cal_now=cal_s
+                ),
+                "latency_budget_s": LATENCY_BUDGET_S,
+                "latency_exceptions": LATENCY_EXCEPTIONS,
+                # the ceilings' home-host calibration: over_latency_budget
+                # rescales by cal_s/latency_cal_base before comparing, so a
+                # slow driver host no longer raises false budget flags
+                "latency_cal_base": cal_base,
+                "over_latency_budget": over_latency_budget(
+                    timings, cur_sf, cal_now=cal_s, cal_base=cal_base
+                ),
+            }
+        )
+        payload.update(perf_vs_prev(timings, cal_s, sf=cur_sf))
     # The driver's stdout capture keeps only the LAST ~2000 chars of the
     # line; at 300+ queries the per-query map alone exceeds that, so
     # BENCH_r02..r05 all carry "parsed": null. The printed line stays the
@@ -401,10 +517,14 @@ def main() -> None:
     # full line / BENCH_latest_full.json; the two lines never disagree
     # (the compact one is a field-subset of the same payload).
     print(json.dumps(compact_summary(payload)))
+    if failed:
+        sys.exit(1)
     # strict mode (local/CI use): non-zero exit on any per-query regression
     # or absolute-budget breach
-    if (regressed_r1 or regressed_prev or over_budget) and os.environ.get(
-        "SPARK_GRAFT_BENCH_STRICT"
+    if os.environ.get("SPARK_GRAFT_BENCH_STRICT") and any(
+        payload.get(k)
+        for k in ("regressions_vs_r1", "regressions_vs_prev",
+                  "over_latency_budget")
     ):
         sys.exit(1)
 

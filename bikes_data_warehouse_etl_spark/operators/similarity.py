@@ -175,7 +175,15 @@ def ivf_assign(
     # is hoisted the same way: ``array_position(sims, array_max(sims))``
     # references it twice, which would otherwise duplicate all
     # len(centroids) dot folds per row.
-    nrm = F.col("__nrm__")
+    # staging names must not collide with (and so overwrite, then drop)
+    # an input column; Spark resolves names case-insensitively
+    taken = {c.lower() for c in df.columns}
+    nrm_name, sims_name = "__nrm__", "__sims__"
+    while nrm_name in taken:
+        nrm_name += "_"
+    while sims_name in taken:
+        sims_name += "_"
+    nrm = F.col(nrm_name)
     sims = F.array(
         *[
             F.when(
@@ -186,17 +194,17 @@ def ivf_assign(
             for _, vec in centroids
         ]
     )
-    s = F.col("__sims__")
+    s = F.col(sims_name)
     # argmax with lowest-index tie-break: array_position finds the first max
     best_idx = F.array_position(s, F.array_max(s)).cast("int")
     cid = F.element_at(
         F.array(*[F.lit(cid) for cid, _ in centroids]), best_idx
     )
     return (
-        df.withColumn("__nrm__", norm(F.col(vec_col)))
-        .withColumn("__sims__", sims)
+        df.withColumn(nrm_name, norm(F.col(vec_col)))
+        .withColumn(sims_name, sims)
         .withColumn("centroid_id", cid)
-        .drop("__nrm__", "__sims__")
+        .drop(nrm_name, sims_name)
     )
 
 

@@ -43,6 +43,8 @@ QUERIES: dict[str, QuerySpec] = {}
 
 def _q(name: str, oracle: Optional[str]):
     def reg(fn: Callable[[SparkSession, str], DataFrame]):
+        if name in QUERIES:
+            raise ValueError(f"query {name!r} is registered twice")
         QUERIES[name] = QuerySpec(spark=fn, oracle=oracle)
         return fn
 

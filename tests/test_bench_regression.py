@@ -12,6 +12,8 @@ import json
 import os
 import sys
 
+import pytest
+
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
@@ -333,3 +335,117 @@ def test_compact_summary_carries_perf_fields_within_tail():
     assert parsed["geomean_speedup_vs_prev"] == 1.043
     assert len(parsed["top_regressed"]) == 5
     assert "queries" not in parsed
+
+
+# --- the one suite timing loop: failures, subset, config A/B ----------------
+def _spec(fn):
+    from bikes_data_warehouse_etl_spark.plans.synthetic import QuerySpec
+
+    return QuerySpec(spark=fn, oracle=None)
+
+
+def test_failed_query_does_not_hide_later_ones(spark, monkeypatch):
+    """A query raising at build time or at execution is recorded under
+    ``failed`` and not retried; the queries after it are still timed
+    on every pass."""
+    import bench
+
+    monkeypatch.setattr(bench, "run_calibration", lambda spark: 0.0)
+
+    def build_error(spark, sf_dir):
+        raise ValueError("bad builder\nsecond line")
+
+    specs = {
+        "ok_first": _spec(lambda s, d: s.range(3)),
+        "build_error": _spec(build_error),
+        "exec_error": _spec(
+            lambda s, d: s.range(1).selectExpr("raise_error('exec boom')")
+        ),
+        "ok_last": _spec(lambda s, d: s.range(5)),
+    }
+    samples, failed, cal = bench.run_passes(spark, specs, "unused", 2)
+    assert failed.keys() == {"build_error", "exec_error"}
+    assert failed["build_error"] == "bad builder"
+    assert "exec boom" in failed["exec_error"]
+    assert len(samples[None]["ok_first"]) == 2
+    assert len(samples[None]["ok_last"]) == 2
+    assert samples[None]["build_error"] == []
+    assert cal == [0.0, 0.0]
+
+
+def test_unknown_query_exits_2():
+    import bench
+
+    assert bench.parse_args(["pushdown_scan"]).queries == ["pushdown_scan"]
+    for argv in (
+        ["pushdown_scan", "no_such_query"],
+        ["--ab", "spark.sql.shuffle.partitions=4"],
+        ["--ab", "spark.sql.shuffle.partitions=4,4"],
+    ):
+        with pytest.raises(SystemExit) as e:
+            bench.parse_args(argv)
+        assert e.value.code == 2, argv
+
+
+def test_ab_alternates_arms_and_restores_conf(spark, monkeypatch):
+    import bench
+
+    monkeypatch.setattr(bench, "run_calibration", lambda spark: 0.0)
+    key = "spark.sql.shuffle.partitions"
+    prior = spark.conf.get(key)
+    seen: list[str] = []
+
+    def probe(s, d):
+        seen.append(s.conf.get(key))
+        return s.range(2)
+
+    args = bench.parse_args(["--ab", f"{key}=3,5", "pushdown_scan"])
+    samples, failed, _ = bench.run_passes(
+        spark, {"probe": _spec(probe)}, "unused", 3, args.ab
+    )
+    assert seen == ["3", "5", "5", "3", "3", "5"]  # ABBA across passes
+    assert failed == {}
+    assert {arm: len(v["probe"]) for arm, v in samples.items()} == {
+        "3": 3,
+        "5": 3,
+    }
+    assert spark.conf.get(key) == prior
+    # a conf that was unset before the A/B is unset again afterwards
+    unset_key = "spark.bench.test.ab_key"
+    bench.run_passes(
+        spark, {"probe": _spec(lambda s, d: s.range(1))}, "unused", 1,
+        (unset_key, ["a", "b"]),
+    )
+    assert spark.conf.get(unset_key, None) is None
+
+
+def test_compact_summary_carries_failures_and_ab_within_tail():
+    from bench import compact_summary
+
+    payload = {
+        "metric": "synthetic_query_suite_total",
+        "value": 12.5,
+        "unit": "sec",
+        "queries": {f"q{i}": 0.5 for i in range(275)},
+        "failed": {f"q{i}": "x" * 300 for i in range(275, 315)},
+        "sf": 0.1,
+        "runs_per_query": 3,
+        "calibration_s": 0.922,
+        "ab": {
+            "conf": "spark.sql.adaptive.coalescePartitions.initialPartitionNum",
+            "total": {"4": 130.2, "32": 141.9},
+            "queries": {
+                arm: {f"q{i}": 0.5 for i in range(275)} for arm in ("4", "32")
+            },
+        },
+    }
+    line = json.dumps(compact_summary(payload))
+    assert len(line) < 1900, len(line)
+    parsed = json.loads(line)
+    assert parsed["failed_n"] == 40
+    assert parsed["queries_n"] == 275
+    assert parsed["ab"] == {
+        "conf": payload["ab"]["conf"],
+        "total": {"4": 130.2, "32": 141.9},
+    }
+    assert "failed" not in parsed and "queries" not in parsed

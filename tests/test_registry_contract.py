@@ -71,6 +71,38 @@ def test_registry_size_floor():
     assert len(QUERIES) >= 300
 
 
+def test_discovery_registers_every_declared_query():
+    """``plans/__init__`` fills the registry by importing every module
+    of the package; a module discovery missed would drop its queries
+    without an error. The registry must hold exactly the ``@_q(``
+    registrations in the source, with ``pushdown_scan`` first (the
+    bench's first query absorbs the JVM warm-up)."""
+    import glob
+    import os
+    import re
+
+    import bikes_data_warehouse_etl_spark.plans as plans
+
+    n_decorators, declared = 0, set()
+    for path in glob.glob(os.path.join(os.path.dirname(plans.__file__), "*.py")):
+        with open(path) as f:
+            src = f.read()
+        n_decorators += src.count("@_q(")
+        declared |= set(re.findall(r'@_q\(\s*"([^"]+)"', src))
+    assert len(QUERIES) == n_decorators == len(declared)
+    assert set(QUERIES) == declared
+    assert next(iter(QUERIES)) == "pushdown_scan"
+
+
+def test_duplicate_query_name_raises():
+    import pytest
+
+    from bikes_data_warehouse_etl_spark.plans.synthetic import _q
+
+    with pytest.raises(ValueError, match="pushdown_scan"):
+        _q("pushdown_scan", None)(lambda spark, sf_dir: None)
+
+
 def test_canonical_hash_dtype_robust():
     """ADVICE r7: the vectorized hash must not depend on which physical
     dtype an engine returned — int64 vs object ints vs integral

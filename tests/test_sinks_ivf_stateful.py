@@ -7,6 +7,7 @@ import pyspark.sql.functions as F
 
 from bikes_data_warehouse_etl_spark.operators.similarity import (
     brute_force_topk,
+    ivf_assign,
     ivf_centroids_from_seed_rows,
     ivf_topk,
 )
@@ -104,6 +105,22 @@ def test_ivf_full_probe_equals_brute_force(spark, sf_dir):
     assert len(partial) == 10
     recall = len({r["vec_id"] for r in partial} & set(exact)) / 10
     assert recall >= 0.2  # conservative bound for random 64-d vectors
+
+
+def test_ivf_assign_keeps_user_columns_named_like_its_temps(spark):
+    """The staging columns must not overwrite and then drop an input
+    column that happens to share their name (ADVICE r11)."""
+    df = spark.createDataFrame(
+        [(1, [1.0, 0.0], "keep-a", 7), (2, [0.0, 1.0], "keep-b", 8)],
+        "vec_id int, embedding array<double>, __nrm__ string, __SIMS__ int",
+    )
+    out = ivf_assign(df, [(10, [1.0, 0.0]), (20, [0.0, 1.0])])
+    assert out.columns == df.columns + ["centroid_id"]
+    rows = out.orderBy("vec_id").collect()
+    assert [(r["__nrm__"], r["__SIMS__"], r["centroid_id"]) for r in rows] == [
+        ("keep-a", 7, 10),
+        ("keep-b", 8, 20),
+    ]
 
 
 def test_stateful_user_totals_match_batch(spark, sf_dir, tmp_path):
